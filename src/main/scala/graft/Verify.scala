@@ -4,6 +4,17 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Write one query's dump. A NonFatal failure is logged and the run goes
+    * on to the next query (returns false); fatal JVM errors (OOM, stack
+    * overflow, linkage) propagate, as in Bench: after one the JVM is
+    * poisoned and every later dump is suspect. */
+  private[graft] def dumpQuery(name: String, write: () => Unit): Boolean =
+    try { write(); true }
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      false
+    }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg (local iteration only): substring filter on names
@@ -21,12 +32,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => nameFilter.forall(name.contains) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        dumpQuery(name, () => fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -162,7 +162,6 @@ object RoarGraphBuilder {
     val ids = baseRows.map(_._1)
     val vs = VecStore(baseRows.map(_._2), params.metric)
     val bcVs = sc.broadcast(vs)
-    val extToDense = ids.zipWithIndex.toMap
     val n = ids.length
 
     // ---- entry point (G22) ----
@@ -202,20 +201,20 @@ object RoarGraphBuilder {
       }.rdd
 
     // ---- phase 1b/1c: reverse sweep + overflow re-prune (G4/G5/G8) ----
-    // stays distributed end-to-end: nodes without a forward list join in
-    // via leftOuterJoin; nothing reaches the driver until the phase-end
+    // one cogroup of the forward lists with their reverse edges, at the
+    // session's default parallelism (the partition count `spark.range`
+    // gives phase 2). A node with neither list keeps its empty row from
+    // `Array.fill`; nothing reaches the driver until the phase-end
     // broadcast snapshot (which the reference's shared-memory model also
     // requires in full)
-    val fwdDs = sc.parallelize(0 until n, 32).map(i => (i, ()))
-      .leftOuterJoin(forwardRdd)
-      .map { case (i, (_, fwd)) => (i, fwd.getOrElse(Array.empty[Int])) }
-    val revDs = fwdDs.flatMap { case (src, nbrs) => nbrs.map(d => (d, src)) }
+    val revRdd = forwardRdd.flatMap { case (src, nbrs) => nbrs.map(d => (d, src)) }
     val projection: Array[Array[Int]] = {
-      val merged = fwdDs.cogroup(revDs).map { case (node, (fwdIt, revIt)) =>
-        val v = bcVs.value
-        val fwd = fwdIt.headOption.getOrElse(Array.empty[Int])
-        (node, mergeReverse(fwd, revIt.toArray, node, v,
-          appendCap = m, pruneTo = m, backfill = true))
+      val merged = forwardRdd.cogroup(revRdd, sc.defaultParallelism).map {
+        case (node, (fwdIt, revIt)) =>
+          val v = bcVs.value
+          val fwd = fwdIt.headOption.getOrElse(Array.empty[Int])
+          (node, mergeReverse(fwd, revIt.toArray, node, v,
+            appendCap = m, pruneTo = m, backfill = true))
       }.collect()
       val adj = Array.fill(n)(Array.empty[Int])
       merged.foreach { case (i, nb) => adj(i) = nb }
@@ -277,64 +276,55 @@ object RoarGraphBuilder {
 
   /** Reachability repair (revives the reference's dead CollectPoints/dfs,
     * src/index_bipartite.cpp:2521-2604): every node not reachable from the
-    * entry point gets one in-edge from its nearest reachable node, in
-    * ascending dense-id order; each attachment immediately reconnects the
-    * node's own descendants. Deterministic; adds at most one edge per
-    * initially-unreachable node. */
-  private[build] def repairReachability(index: GraphIndex): GraphIndex = {
+    * entry point gets one in-edge from its nearest reachable node (ties by
+    * id), in ascending dense-id order; each attachment immediately
+    * reconnects the node's own descendants. Deterministic; adds at most one
+    * edge per initially-unreachable node.
+    *
+    * The new edge always starts at a node that is already reachable, so
+    * which nodes are reachable at each step does not depend on where the
+    * earlier nodes were attached. One sequential DFS pass therefore finds
+    * the nodes to attach and, for each, the reachable set at its turn: a
+    * prefix of the order in which nodes became reachable. The argmins then
+    * run in parallel, one per attached node, and the edges are appended in
+    * ascending id: the same argmin over the same set as the one-scan-per-
+    * node loop (RepairOracle in the tests), so the adjacency is identical. */
+  private[graft] def repairReachability(index: GraphIndex): GraphIndex = {
     val n = index.n
-    val adj = index.adj.map(_.clone())
+    val adj = index.adj.clone()
     val seen = new Array[Boolean](n)
-    def bfs(from: Int): Unit = {
-      var stack = List(from)
-      if (!seen(from)) { seen(from) = true }
-      while (stack.nonEmpty) {
-        val cur = stack.head; stack = stack.tail
+    val order = new Array[Int](n) // dense ids in the order they become reachable
+    var reached = 0
+    val stack = new Array[Int](n)
+    def dfs(from: Int): Unit = {
+      seen(from) = true; order(reached) = from; reached += 1
+      var top = 0
+      stack(0) = from
+      while (top >= 0) {
+        val cur = stack(top); top -= 1
         adj(cur).foreach { nb =>
-          if (!seen(nb)) { seen(nb) = true; stack = nb :: stack }
+          if (!seen(nb)) {
+            seen(nb) = true; order(reached) = nb; reached += 1
+            top += 1; stack(top) = nb
+          }
         }
       }
     }
-    bfs(index.ep)
+    dfs(index.ep)
+    val attach = Array.newBuilder[Int]
+    val reachedBefore = Array.newBuilder[Int]
     var u = 0
     while (u < n) {
-      if (!seen(u)) {
-        // nearest currently-reachable node (ties by id). The scan is the
-        // cost center at scale — O(n·dim) per unreachable node, measured
-        // serial-loop-bound at 1M nodes — so the argmin fans out over
-        // chunks; min over (dist, id) is associative, so the result is
-        // bit-identical to the serial loop (GraphGoldenSpec pins it).
-        val chunks = 256
-        val step = (n + chunks - 1) / chunks
-        val (bestD, best) = java.util.stream.IntStream.range(0, chunks)
-          .parallel()
-          .mapToObj[(Double, Int)] { c =>
-            val lo = c * step
-            val hi = math.min(lo + step, n)
-            var bd = Double.MaxValue
-            var b = -1
-            var r = lo
-            while (r < hi) {
-              if (seen(r)) {
-                val d = index.vs.dist(r, u)
-                if (d < bd || (d == bd && r < b)) { bd = d; b = r }
-              }
-              r += 1
-            }
-            (bd, b)
-          }
-          .reduce((Double.MaxValue, -1),
-            (a: (Double, Int), b: (Double, Int)) =>
-              if (b._2 == -1) a
-              else if (a._2 == -1 || b._1 < a._1 ||
-                (b._1 == a._1 && b._2 < a._2)) b
-              else a)
-        adj(best) = adj(best) :+ u
-        seen(u) = true
-        bfs(u)
-      }
+      if (!seen(u)) { attach += u; reachedBefore += reached; dfs(u) }
       u += 1
     }
+    val (nodes, prefix) = (attach.result(), reachedBefore.result())
+    val from = new Array[Int](nodes.length)
+    java.util.stream.IntStream.range(0, nodes.length).parallel().forEach { k =>
+      from(k) = index.vs.nearestOf(nodes(k), order, prefix(k))
+    }
+    var k = 0
+    while (k < nodes.length) { adj(from(k)) = adj(from(k)) :+ nodes(k); k += 1 }
     index.copy(adj = adj)
   }
 

@@ -56,6 +56,22 @@ final class VecStore(val n: Int, val dim: Int, val data: Array[Float],
     }
   }
 
+  /** The row nearest to stored row `target` among `rows(0 until count)`,
+    * by (distance, id) whatever the list's order; -1 if none is closer
+    * than Double.MaxValue. */
+  def nearestOf(target: Int, rows: Array[Int], count: Int): Int = {
+    var bd = Double.MaxValue
+    var best = -1
+    var k = 0
+    while (k < count) {
+      val r = rows(k)
+      val d = dist(r, target)
+      if (d < bd || (d == bd && r < best)) { bd = d; best = r }
+      k += 1
+    }
+    best
+  }
+
   def row(i: Int): Array[Float] = {
     val out = new Array[Float](dim)
     System.arraycopy(data, i * dim, out, 0, dim)

@@ -37,4 +37,12 @@ class BenchFatalSpec extends AnyFunSuite {
       Bench.timeQuery("fatal2", () => throw new StackOverflowError())
     }
   }
+
+  test("Verify: NonFatal dump failure is skipped, OutOfMemoryError propagates") {
+    assert(!Verify.dumpQuery("boom", () => throw new RuntimeException("bad plan")))
+    assert(Verify.dumpQuery("ok", () => ()))
+    intercept[OutOfMemoryError] {
+      Verify.dumpQuery("fatal", () => throw new OutOfMemoryError("injected"))
+    }
+  }
 }

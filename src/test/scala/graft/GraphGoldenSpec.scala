@@ -46,16 +46,48 @@ class GraphGoldenSpec extends SparkSpec {
     assert(h == "1d7d2dd18f050d5884d3a390020377b9befb19f23f06a99ee42d673518754587", s"bipartite search ids hash changed: $h")
   }
 
+  /** Canonical adjacency hash: "id:nbr,nbr,..." lines in external ids. */
+  private def adjHash(idx: graft.build.GraphIndex): String =
+    sha256(idx.ids.indices
+      .map(i => s"${idx.ids(i)}:${idx.adj(i).map(idx.ids(_)).mkString(",")}")
+      .sorted.mkString("\n"))
+
   test("golden: in-memory build adjacency at sf0.01") {
     import graft.core.{BuildParams, Metric, Tables}
     val emb = Tables.vectors(spark, sf001)
     val idx = graft.build.RoarGraphBuilder.build(
       emb.filter(col("id") >= 20), emb.filter(col("id") < 20),
       BuildParams(mSq = 40, mPjbp = 12, lPjpq = 60, metric = Metric.L2))
-    val rows = idx.ids.indices
-      .map(i => s"${idx.ids(i)}:${idx.adj(i).map(idx.ids(_)).mkString(",")}")
-      .sorted
-    val h = sha256(rows.mkString("\n"))
+    val h = adjHash(idx)
     assert(h == "d3bd16324132680a42022a023d183aa414d05fef56aa62dfe15db94979504097", s"build adjacency hash changed: $h")
+  }
+
+  test("golden: in-memory inner-product build adjacency, repair-heavy") {
+    // A seeded cross-modal corpus: 600 base rows whose norms vary 0.3-1.7x,
+    // and 150 training queries from a shifted distribution. Under IP the
+    // large-norm rows draw the in-edges, so about half the nodes start with
+    // none: the reachability repair attaches over a quarter of them, and
+    // the hash pins its edges as well as the merges'.
+    import graft.core.{BuildParams, Metric}
+    val s = spark
+    import s.implicits._
+    val rnd = new java.util.Random(11)
+    val dim = 16
+    val base = (0 until 600).map { i =>
+      val scale = 0.3 + rnd.nextDouble() * 1.4
+      (i.toLong + 1000, Array.fill(dim)((rnd.nextGaussian() * scale).toFloat))
+    }.toDF("id", "vec")
+    val queries = (0 until 150).map { i =>
+      (i.toLong, Array.tabulate(dim)(d =>
+        (rnd.nextGaussian() + (if (d == 0) 1.0 else 0.0)).toFloat))
+    }.toDF("id", "vec")
+    val params = BuildParams(mSq = 40, mPjbp = 12, lPjpq = 40, metric = Metric.InnerProduct)
+    val raw = graft.build.RoarGraphBuilder.build(base, queries,
+      params.copy(repairReachability = false))
+    val idx = graft.build.RoarGraphBuilder.build(base, queries, params)
+    val attached = idx.adj.map(_.length).sum - raw.adj.map(_.length).sum
+    assert(attached * 4 >= idx.n, s"repair attached only $attached of ${idx.n} nodes")
+    val h = adjHash(idx)
+    assert(h == "35204d6ba84e290d34aee20ff78706efd02ae5994a7fed6ec36181d5c928b0e9", s"IP build adjacency hash changed: $h (attached $attached of ${idx.n})")
   }
 }

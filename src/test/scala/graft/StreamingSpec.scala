@@ -30,6 +30,16 @@ class StreamingSpec extends SparkSpec {
       "shuffle-partition conf must be restored after the streaming query")
   }
 
+  test("the bench's streaming warm-up leaves no view and no temp dir behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def warmDirs: Int =
+      Option(tmp.listFiles()).toSeq.flatten.count(_.getName.startsWith("graft_warm_ev"))
+    val before = warmDirs
+    Bench.warmStreaming(spark, sf0001)
+    assert(!spark.catalog.tableExists("graft_bench_warm_stream"))
+    assert(warmDirs == before)
+  }
+
   test("hourly rollup is batch-equal across multiple micro-batches") {
     // split the events table into several files and feed them one per
     // micro-batch — state must merge identically to the single-batch case
